@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Similarity-search scale probe: synthesizes N deterministic 64-dim
@@ -18,7 +17,6 @@ object AnnBench {
 
   def main(args: Array[String]): Unit = {
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_NVECS", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // IVF/LSH tuning knobs (the sweep axes): cells*probe sets the scanned
     // corpus fraction (nProbe/nCells), iters the Lloyd training cost.
     val ivfCells = sys.env.getOrElse("SPARK_GRAFT_IVF_CELLS", "64").toInt
@@ -31,16 +29,10 @@ object AnnBench {
     val ivfTrain = sys.env.getOrElse("SPARK_GRAFT_IVF_TRAIN", "50000").toLong
     val lshBits = sys.env.getOrElse("SPARK_GRAFT_LSH_BITS", "12").toInt
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // 10M-vector runs on a big heap see full-GC pauses that outlast
-      // the 10 s default heartbeat; a missed beat tears the context down
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      .getOrCreate()
+    // 10M-vector runs on a big heap see full-GC pauses that outlast
+    // the 10 s default heartbeat; a missed beat tears the context down
+    val spark = GraftSession.harness("graft-annbench",
+      "spark.executor.heartbeatInterval" -> "60s", "spark.network.timeout" -> "600s")
     spark.sparkContext.setLogLevel("WARN")
 
     // Deterministic embeddings in [-0.5, 0.5)^64; every 20th vector is a

@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.IndexPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Single-assay throughput benchmark against the reference envelope.
@@ -19,7 +18,6 @@ import org.apache.spark.sql.functions._
 object AssayBench {
   def main(args: Array[String]): Unit = {
     val nPsms = sys.env.getOrElse("SPARK_GRAFT_NPSMS", "800000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4") // reference envelope: 4
     // SPARK_GRAFT_RESCUE=1: every PSM id misses the exact scan-key join and
     // resolves through the stage-2 unique-contains rescue instead
     // (scanKeyJoin's probe collect + broadcast contains-theta join at the
@@ -33,13 +31,7 @@ object AssayBench {
     // real assays; this measures the cliff, run it on 32 CPUs.
     val rescueAll = sys.env.get("SPARK_GRAFT_RESCUE")
       .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", math.max(cpus.toInt, 4).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-assaybench")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -119,7 +111,7 @@ object AssayBench {
     // rescue mode: every output row came through stage 2 — count them so
     // the probe path's effectiveness is part of the record, not just time
     val rescuedRows = if (rescueAll) out.archiveSpectra.count() else -1L
-    println(f"""{"metric":"assay_index_sec","value":$sec%.1f,"unit":"sec","cpu_sec":$cpuSec%.1f,"n_psms":$nPsms,"cpus":$cpus,"rescue_mode":$rescueAll,"rescued_rows":$rescuedRows,"out_psms":${v.getAs[Long]("nr_psms")},"nr_decoys":${v.getAs[Long]("nr_decoys")},"stages":{"build_precount":$tBuild%.1f,"archive_spectra":$tSpectra%.1f,"psm_summaries":$tSummaries%.1f,"protein_evidence":$tProteins%.1f,"validity":$tValidity%.1f},"stages_cpu":{"build_precount":$cBuild%.1f,"archive_spectra":$cSpectra%.1f,"psm_summaries":$cSummaries%.1f,"protein_evidence":$cProteins%.1f,"validity":$cValidity%.1f}}""")
+    println(f"""{"metric":"assay_index_sec","value":$sec%.1f,"unit":"sec","cpu_sec":$cpuSec%.1f,"n_psms":$nPsms,"cpus":${GraftSession.cpus},"rescue_mode":$rescueAll,"rescued_rows":$rescuedRows,"out_psms":${v.getAs[Long]("nr_psms")},"nr_decoys":${v.getAs[Long]("nr_decoys")},"stages":{"build_precount":$tBuild%.1f,"archive_spectra":$tSpectra%.1f,"psm_summaries":$tSummaries%.1f,"protein_evidence":$tProteins%.1f,"validity":$tValidity%.1f},"stages_cpu":{"build_precount":$cBuild%.1f,"archive_spectra":$cSpectra%.1f,"psm_summaries":$cSummaries%.1f,"protein_evidence":$cProteins%.1f,"validity":$cValidity%.1f}}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   * Results are fully materialized through the noop sink (count() could
@@ -9,21 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Static conf, default 100: a 285-query suite generates far more
-      // codegen units than that, so the generated-class cache THRASHES —
-      // every repeat of a late-alphabet query re-pays Janino compilation
-      // (the round-13 adjudication of the r12 "n-gram family CPU drift":
-      // tdp_dataset_card burned 121 CPU-s in-suite vs 24 isolated on
-      // identical plans). Sized to hold the whole suite's units once.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest table.

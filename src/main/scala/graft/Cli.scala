@@ -44,23 +44,9 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, usage)
-    // Respect spark-submit's --master/--conf when present: hard-setting
-    // them here would silently force a cluster submission into local[*]
-    // with 32 shuffle partitions. Env vars win, then the submit conf,
-    // then the local defaults.
-    val submitConf = new org.apache.spark.SparkConf(true)
-    val builder = SparkSession.builder()
-      .appName(s"graft-${args.head}")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    sys.env.get("SPARK_MASTER")
-      .orElse(if (submitConf.contains("spark.master")) None else Some("local[*]"))
-      .foreach(builder.master)
-    sys.env.get("SPARK_GRAFT_CPUS")
-      .orElse(if (submitConf.contains("spark.sql.shuffle.partitions")) None
-        else Some("32"))
-      .foreach(builder.config("spark.sql.shuffle.partitions", _))
-    val spark = builder.getOrCreate()
+    // GraftSession respects spark-submit's --master/--conf: env vars win,
+    // then the submit conf, then the local defaults
+    val spark = GraftSession.builder(s"graft-${args.head}").getOrCreate()
     try run(spark, args)
     finally spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.SpectraCluster
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Spectra-clustering scale probe: synthesizes N deterministic spectra
@@ -24,14 +23,8 @@ object ClusterBench {
 
   def main(args: Array[String]): Unit = {
     val nSpectra = sys.env.getOrElse("SPARK_GRAFT_NSPECTRA", "500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nPeaks = 60
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-clusterbench")
     spark.sparkContext.setLogLevel("WARN")
 
     // Deterministic spectra: groups of 5 consecutive ids share the base

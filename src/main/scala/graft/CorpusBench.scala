@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{CorpusPipeline, Curation, Dedup}
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation scale probe: synthesizes N documents (deterministic
@@ -20,14 +19,7 @@ object CorpusBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_NDOCS", "500000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-corpusbench")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -91,8 +83,10 @@ object CorpusBench {
     // round-7 stages: linear substring-dedup spans + removal (the planted
     // near/exact duplicates make every 10th doc share long 5-gram runs),
     // and BM25 retrieval against three mid-vocabulary terms.
+    // md5 baseline vs the xxhash64 default, as an explicit A/B pair
     val (nSpans, tSpans) = time {
-      Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5).count()
+      Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5,
+        portableHash = true).count()
     }
     val (nSpansXx, tSpansXx) = time {
       Dedup.duplicateSpans(docs, col("id"), col("text"), k = 5,
@@ -273,7 +267,8 @@ object CorpusBench {
     // run; subquadratic = the gram shuffle + islands + slice join, never
     // a pair expansion (compare against n^2/2 = 1.25e11 pair checks)
     val (nSubSpans, tSubstr) = time {
-      Dedup.substringDedup(docs, col("id"), col("text"), k = 5).count()
+      Dedup.substringDedup(docs, col("id"), col("text"), k = 5,
+        portableHash = true).count()
     }
     val (nSubSpansXx, tSubstrXx) = time {
       Dedup.substringDedup(docs, col("id"), col("text"), k = 5,

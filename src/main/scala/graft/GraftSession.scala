@@ -1,47 +1,70 @@
 package graft
 
+import graft.plans.GraftExtensions
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-aware defaults.
+/** The engine's one session factory. The CLI, Bench, Verify,
+  * InvarianceCheck, the scale benches and the tests all build their
+  * session here, under one rule ([[settings]]):
+  *  - `cpus` is `$SPARK_GRAFT_CPUS`, else the JVM's available processors;
+  *  - the master is `$SPARK_MASTER`, else spark-submit's, else `local[cpus]`;
+  *  - shuffle partitions are `$SPARK_GRAFT_CPUS`, else spark-submit's, else
+  *    `cpus`;
+  *  - the session time zone is UTC, the generated-class cache holds 5000
+  *    entries, and [[GraftExtensions]] (the native SQL functions plus
+  *    `NativeVectorRule`) is always loaded.
   *
-  * Sizing rationale (100 TB target; see README "Design for 100 TB"):
-  *  - `shuffle.partitions` follows available parallelism locally; on a real
-  *    cluster set it so a shuffle partition is 100-200 MB
-  *    (100 TB input with ~3x reduction => O(200k) partitions, so AQE
-  *    coalescing from a high initial number is the right mode — we set
-  *    `adaptive.coalescePartitions.enabled` and leave the initial count
-  *    high rather than hand-tuning).
-  *  - `files.maxPartitionBytes` 128 MB keeps scan tasks within executor
-  *    memory even with wide nested spectrum rows.
-  *  - AQE on: per-assay PSM counts vary 815 -> 800,790 in the reference
-  *    corpus (BASELINE.md) — exactly the skew AQE re-plans
-  *    (skewJoin.enabled for the band-bucket joins).
-  *  - ANSI stays on (Spark 4 default): casts on untrusted strings are
-  *    rlike-guarded in the engine instead.
+  * Everything else is Spark 4.1's default: AQE with partition coalescing
+  * and skew-join splitting, 128 MB scan splits, ANSI on (casts on untrusted
+  * strings are rlike-guarded in the engine instead). On a real cluster set
+  * the shuffle partitions through spark-submit so one partition is
+  * 100-200 MB; AQE coalesces from there. Without that setting they fall
+  * back to the driver JVM's processor count, which AQE cannot split.
   */
 object GraftSession {
 
-  def builder(appName: String, master: Option[String] = None): SparkSession.Builder = {
-    val cores = Runtime.getRuntime.availableProcessors()
-    val b = SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", math.max(cores, 8).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      // Static conf, default 100: a long-lived session replaying many
-      // distinct plans thrashes the generated-class cache and re-pays
-      // Janino compilation on every replay (measured 342.9->272.5 s on
-      // the 285-query suite when sized; see Bench.scala). Production
-      // sessions inherit the same fix as the bench/verify mains.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-    master.orElse(sys.env.get("SPARK_MASTER")).map(b.master).getOrElse(b)
+  /** `$SPARK_GRAFT_CPUS`, else the JVM's available processors. */
+  def cpus: Int = cpus(sys.env, Runtime.getRuntime.availableProcessors())
+
+  private def cpus(env: Map[String, String], processors: Int): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(processors)(_.toInt)
+
+  /** The conf the factory sets, as a pure function of the environment, the
+    * spark-submit conf and the processor count. A key spark-submit already
+    * set is left to it unless an env var overrides it. */
+  private[graft] def settings(
+      env: Map[String, String], submitted: Map[String, String],
+      processors: Int): Seq[(String, String)] = {
+    val n = cpus(env, processors)
+    def unlessSubmitted(key: String, default: String): Option[String] =
+      if (submitted.contains(key)) None else Some(default)
+    val master = env.get("SPARK_MASTER").orElse(unlessSubmitted("spark.master", s"local[$n]"))
+    val partitions = env.get("SPARK_GRAFT_CPUS")
+      .orElse(unlessSubmitted("spark.sql.shuffle.partitions", n.toString))
+    Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      // Static conf, default 100: the query suite generates far more
+      // codegen units than that, so the cache thrashes and every replay
+      // re-pays Janino compilation (round-13: tdp_dataset_card burned
+      // 121 CPU-s in-suite vs 24 isolated; the 285-query suite went
+      // 342.9 -> 272.5 s when sized; PLANS.md r13).
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+    ) ++ master.map("spark.master" -> _) ++
+      partitions.map("spark.sql.shuffle.partitions" -> _)
   }
 
-  def local(appName: String, threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
-    builder(appName, Some(s"local[$threads]"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+  def builder(appName: String): SparkSession.Builder = {
+    val conf = settings(sys.env, new SparkConf(true).getAll.toMap,
+      Runtime.getRuntime.availableProcessors())
+    conf.foldLeft(SparkSession.builder().appName(appName)
+      .withExtensions(new GraftExtensions)) { case (b, (k, v)) => b.config(k, v) }
+  }
+
+  /** A harness session (bench, verify, tests): the rule above with the web
+    * UI off, plus any harness-specific conf. The CLI keeps Spark's UI
+    * default so a cluster submission has its UI. */
+  def harness(appName: String, extra: (String, String)*): SparkSession =
+    (("spark.ui.enabled" -> "false") +: extra)
+      .foldLeft(builder(appName)) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
 }

@@ -32,15 +32,9 @@ object InvarianceCheck {
 
   private def runAll(sfDir: String, cpus: Int, shufflePartitions: Int,
       only: Set[String]): Map[String, Either[String, (Long, String)]] = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: the full-suite run thrashes the
-      // generated-class cache otherwise (see Bench.scala / PLANS.md r13)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-invariance",
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString)
     spark.sparkContext.setLogLevel("ERROR")
     val out = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.isEmpty || only(q._1))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{AsOfJoin, EntityResolution, RangeJoin}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Temporal-join + entity-resolution scale probe: synthesizes N events
@@ -19,14 +18,7 @@ object TemporalBench {
 
   def main(args: Array[String]): Unit = {
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_NEVENTS", "20000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-temporalbench")
     spark.sparkContext.setLogLevel("WARN")
 
     val nUsers = 100000L

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +7,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name filter (local iteration)
     val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // static conf, default 100: the 285-query suite thrashes the
-      // generated-class cache otherwise (see Bench.scala / PLANS.md r13)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A crashed query must be LOUD: leave an empty query dir + _FAILED

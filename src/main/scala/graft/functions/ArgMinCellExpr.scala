@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,19 +103,6 @@ object ArgMinCellExpr {
   }
 
   val FunctionName = "graft_argmin_cell"
-
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 2)(e => ArgMinCellExpr(e(0), e(1))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
 
   /** Column API: (vec, centroid rows ordered by cell id). Caller ensures
     * registration ([[GraftFunctions.ensureRegistered]]). */

@@ -139,25 +139,12 @@ object BinPeaksExpr {
 
   val FunctionName = "graft_bin_peaks"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 4)(e => BinPeaksExpr(e(0), e(1), e(2), e(3))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API. Requires an active session (operators pass their input
     * frame's session). */
   def binPeaksCol(
       spark: SparkSession, masses: Column, intensities: Column,
       binWidth: Double, topK: Int): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(FunctionName, masses, intensities, lit(binWidth), lit(topK))
   }
 }

@@ -149,28 +149,13 @@ object BinVectorExprs {
   val DotName = "graft_bin_dot"
   val TopBinsName = "graft_top_bins"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        DotName, VectorExprs.arity(DotName, 2)(e => SortedBinDotExpr(e(0), e(1))),
-        "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        TopBinsName, VectorExprs.arity(TopBinsName, 2)(e => TopBinsExpr(e(0), e(1))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   def binDotCol(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(DotName, a, b)
   }
 
   def topBinsCol(spark: SparkSession, a: Column, n: Int): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(TopBinsName, a, lit(n))
   }
 }

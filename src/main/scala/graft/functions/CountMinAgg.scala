@@ -140,33 +140,12 @@ object CountMinAgg {
     StructField("total", LongType, nullable = false),
     StructField("counters", ArrayType(LongType, containsNull = false), nullable = false)))
 
-  private val Name = "cms_sketch"
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        Name,
-        exprs => {
-          require(exprs.length == 3, s"$Name(hash, depth, width) takes 3 arguments")
-          def intLit(e: Expression, what: String): Int = e match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"$Name: $what must be an integer literal, got $other")
-          }
-          CountMinAgg(exprs.head, intLit(exprs(1), "depth"), intLit(exprs(2), "width"))
-            .toAggregateExpression()
-        },
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
+  private[functions] val Name = "cms_sketch"
 
   /** Aggregate Column: per-group (total, counters[depth*width]) from a
     * BIGINT hash column (use [[TextFunctions.portableHash32]]). */
   def cmsSketch(spark: SparkSession, hash: Column, depth: Int, width: Int): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(Name, hash,
       org.apache.spark.sql.functions.lit(depth),
       org.apache.spark.sql.functions.lit(width))

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.MapData
@@ -90,23 +90,8 @@ object EncodePeptidoformExpr {
 
   val FunctionName = "graft_encode_peptidoform"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  /** Register in the session's function registry (idempotent and memoized
-    * per session, like the other kernels); the column API resolves through
-    * the registry so no private Column internals are touched. */
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        exprs => EncodePeptidoformExpr(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
-  /** Column-level API; caller must [[register]] on the session first.
+  /** Column-level API; caller must
+    * [[GraftFunctions.ensureRegistered]] on the session first.
     * Inputs: (string sequence, map<int,string> mods, int charge). */
   def encode(seq: Column, mods: Column, charge: Column): Column =
     call_function(FunctionName, seq, mods, charge)

@@ -128,23 +128,10 @@ object GramOverlapExpr {
     new GenericInternalRow(Array[Any](cTot.toLong, rTot.toLong, clip))
   }
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 3)(e => GramOverlapExpr(e(0), e(1), e(2))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API (requires an active session, like the other kernels). */
   def overlapCol(cand: Column, ref: Column, n: Int): Column = {
     val s = SparkSession.active
-    register(s)
+    GraftFunctions.ensureRegistered(s)
     call_function(FunctionName, cand, ref, lit(n))
   }
 }

@@ -110,34 +110,12 @@ object KmvSketchAgg {
     StructField("kth_hash", LongType, nullable = true),
     StructField("estimate", DoubleType, nullable = false)))
 
-  private val Name = "kmv_sketch"
-  // weak keys, same as every sibling registration — a strong map would
-  // pin dropped sessions (and their sessionState) forever
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        Name,
-        exprs => {
-          require(exprs.length == 2, s"$Name(hash, k) takes 2 arguments")
-          val kLit = exprs(1) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"$Name: k must be an integer literal, got $other")
-          }
-          KmvSketchAgg(exprs.head, kLit).toAggregateExpression()
-        },
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
+  private[functions] val Name = "kmv_sketch"
 
   /** Aggregate Column: per-group (n_kmv, kth_hash, estimate) from a
     * BIGINT hash column (use [[TextFunctions.portableHash32]]). */
   def kmvSketch(spark: SparkSession, hash: Column, k: Int): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(Name, hash, org.apache.spark.sql.functions.lit(k))
   }
 }

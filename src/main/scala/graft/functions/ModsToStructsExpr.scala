@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -89,17 +89,6 @@ object ModsToStructsExpr {
   }
 
   val FunctionName = "graft_mods_to_structs"
-
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName, exprs => ModsToStructsExpr(exprs.head), "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
 
   def toStructs(mods: Column): Column = call_function(FunctionName, mods)
 }

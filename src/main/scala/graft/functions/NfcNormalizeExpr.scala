@@ -71,22 +71,9 @@ object NfcNormalizeExpr {
 
   val FunctionName = "graft_nfc"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 1)(e => NfcNormalizeExpr(e(0))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API (requires an active session for the native registration). */
   def normalizeCol(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
+    SparkSession.getActiveSession.foreach(GraftFunctions.ensureRegistered)
     call_function(FunctionName, text)
   }
 }

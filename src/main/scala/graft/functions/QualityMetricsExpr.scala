@@ -124,19 +124,6 @@ object QualityMetricsExpr {
 
   val FunctionName = "graft_quality_metrics"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 1)(e => QualityMetricsExpr(e(0))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** The column form's row for a NULL text: `when()` over null conditions
     * falls through to `otherwise` per FIELD there, so ratios are 0.0 while
     * the size- and &&-derived fields stay null. */
@@ -152,7 +139,7 @@ object QualityMetricsExpr {
   def metricsCol(text: Column): Column =
     SparkSession.getActiveSession match {
       case Some(s) =>
-        register(s)
+        GraftFunctions.ensureRegistered(s)
         when(text.isNull, nullTextRow).otherwise(call_function(FunctionName, text))
       case None => TextFunctions.qualityMetricsHof(text)
     }

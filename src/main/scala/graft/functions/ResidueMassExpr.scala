@@ -78,25 +78,12 @@ object ResidueMassExpr {
 
   val FunctionName = "graft_residue_mass"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 1)(e => ResidueMassExpr(e(0))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API: native when a session is active, else the identical-value
     * column-expression fold ([[PeptideFunctions.residueMassHof]]). */
   def residueMassCol(sequence: Column): Column =
     SparkSession.getActiveSession match {
       case Some(s) =>
-        register(s)
+        GraftFunctions.ensureRegistered(s)
         call_function(FunctionName, sequence)
       case None => PeptideFunctions.residueMassHof(sequence)
     }

@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -125,34 +125,13 @@ object TopKByAgg {
     StructField("ord", DoubleType, nullable = false),
     StructField("id", LongType, nullable = false))), containsNull = false)
 
-  private val Name = "topk_ids"
-  // weak keys, same as every sibling registration
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        Name,
-        exprs => {
-          require(exprs.length == 3, s"$Name(ord, id, k) takes 3 arguments")
-          val kLit = exprs(2) match {
-            case Literal(v: Int, IntegerType) => v
-            case other => throw new IllegalArgumentException(
-              s"$Name: k must be an integer literal, got $other")
-          }
-          TopKByAgg(exprs(0), exprs(1), kLit).toAggregateExpression()
-        },
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
+  private[functions] val Name = "topk_ids"
 
   /** Aggregate Column: per-group array of the k greatest (ord, id) pairs
     * (ord desc, id asc ties), only k pairs per (partition, group)
     * crossing the shuffle. */
   def topKIds(spark: SparkSession, ord: Column, id: Column, k: Int): Column = {
-    register(spark)
+    GraftFunctions.ensureRegistered(spark)
     call_function(Name, ord, id, lit(k))
   }
 }

@@ -127,43 +127,13 @@ object VectorExprs {
   val DotName = "graft_vec_dot"
   val SqDistName = "graft_vec_sqdist"
 
-  /** Arity-validating registry builder — shared by the lazy per-session
-    * registration below and [[graft.plans.GraftExtensions]], so both
-    * paths fail a wrong-arity call with the same message. */
-  private[graft] def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      require(exprs.length == n, s"$name expects $n arguments, got ${exprs.length}")
-      build(exprs)
-    }
-
-  // Memoized per session so building many columns (e.g. nBits hyperplane
-  // projections per plan) never re-mutates the shared function registry.
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  /** Idempotent registration in the session function registry (the same
-    * registry route as [[EncodePeptidoformExpr]]). The session is marked
-    * registered only AFTER both functions exist, under the map lock, so a
-    * concurrent first use can never resolve against a half-registered
-    * session. */
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        DotName, arity(DotName, 2)(e => DotProductExpr(e(0), e(1))), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        SqDistName, arity(SqDistName, 2)(e => SqDistExpr(e(0), e(1))), "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Registers on the active session and emits the native call; without an
     * active session (column built outside a session thread) falls back to
     * the identical-value interpreted fold. */
   private def nativeCall(name: String, a: Column, b: Column): Column =
     SparkSession.getActiveSession match {
       case Some(s) =>
-        register(s)
+        GraftFunctions.ensureRegistered(s)
         call_function(name, a, b)
       case None =>
         import org.apache.spark.sql.functions.{aggregate, lit, zip_with}

@@ -91,23 +91,10 @@ object WordGramsExpr {
     new GenericArrayData(out)
   }
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 2)(e => WordGramsExpr(e(0), e(1))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API (requires an active session, like the other kernels). */
   def gramsCol(tokens: Column, n: Int): Column = {
     val s = SparkSession.active
-    register(s)
+    GraftFunctions.ensureRegistered(s)
     call_function(FunctionName, tokens, lit(n))
   }
 }

@@ -98,25 +98,12 @@ object WordShinglesExpr {
 
   val FunctionName = "graft_word_shingles"
 
-  private val registered =
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    if (!registered.containsKey(spark)) {
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        FunctionName,
-        VectorExprs.arity(FunctionName, 2)(e => WordShinglesExpr(e(0), e(1))),
-        "built-in")
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
-
   /** Column API: native when a session is active, else the identical-value
     * column-expression fold (see [[TextFunctions.wordShinglesHof]]). */
   def shinglesCol(text: Column, n: Int): Column =
     SparkSession.getActiveSession match {
       case Some(s) =>
-        register(s)
+        GraftFunctions.ensureRegistered(s)
         call_function(FunctionName, text, lit(n))
       case None => TextFunctions.wordShinglesHof(text, n)
     }

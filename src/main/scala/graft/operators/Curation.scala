@@ -513,7 +513,7 @@ object Curation {
     * the 32-bit md5 prefix / 2^32, same scheme as [[stratifiedSample]]).
     *
     * CORRELATION HAZARD (found by the round-12 composed-chain probe,
-    * [[graft.ChainBench]]): the draw is a PREFIX of md5(key) — the same
+    * recorded in PLANS.md "ChainBench discovery"): the draw is a PREFIX of md5(key) — the same
     * ordering [[sourceQuota]] admits by and [[samplePerGroup]] /
     * [[exactSample]] select by. Splitting a set that was already
     * subsampled in md5-hash order is therefore catastrophically biased

@@ -607,7 +607,7 @@ object Dedup {
   }
 
   /** [[incrementalDedup]] with the bloom prefilter supplied PREBUILT
-    * (round-14; the IncrementalChainBench finding — rebuilding the bloom
+    * (round-14; PLANS.md "IncrementalChainBench" — rebuilding the bloom
     * from the fingerprint store every night is the one O(history) cost
     * in the dedup path, and it is pure artifact: build it once with
     * [[buildSeenBloom]], persist with [[saveBloom]], and the nightly job
@@ -702,7 +702,7 @@ object Dedup {
     // the band keys are derived from the store on the fly; a nightly job
     // should persist them once and use [[incrementalNearDupPrebanded]]
     // (round-14: re-banding a 1M-doc store was ~half the incremental
-    // path's CPU in IncrementalChainBench)
+    // path's CPU; PLANS.md "IncrementalChainBench")
     val sn = seenSignatures.transform(graft.operators.Pin.lazyPin)
     incrementalNearDupPrebanded(batchSignatures,
       bandKeys(sn, numBands, rowsPerBand), sn, numBands, rowsPerBand, threshold)

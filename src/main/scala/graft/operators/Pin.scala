@@ -8,16 +8,10 @@ import org.apache.spark.sql.Dataset
   * per consumer.
   *
   * The pin REPLACES the logical plan with a `Scan ExistingRDD` stub, so
-  * `.explain` output truncates at every pin — which made the committed
-  * before/after plan artifacts unauditable for checkpoint-bearing queries
-  * (r14 verdict: the sim_reciprocal_nn/dq_key_audit evidence gap). When
-  * the JVM property `graft.plan.fullDag=true` is set (ONLY by
-  * [[graft.PlanDumpFmt]], never by Bench/Verify), the pin is skipped so
-  * the dumped plan shows the complete DAG the optimizer actually built.
-  * Execution paths are unaffected: the property is read per call, and
-  * nothing in the bench/oracle harnesses sets it. */
+  * `.explain` output truncates at every pin (r14 verdict: the
+  * sim_reciprocal_nn/dq_key_audit evidence gap). The r15 full-DAG dumps
+  * that skipped the pins, and why they were not the executed plans, are
+  * recorded in OPTIMIZATION_r15.md and VERDICT.md. */
 object Pin {
-  def lazyPin[T](ds: Dataset[T]): Dataset[T] =
-    if (java.lang.Boolean.getBoolean("graft.plan.fullDag")) ds
-    else ds.localCheckpoint(false)
+  def lazyPin[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(false)
 }

@@ -247,7 +247,7 @@ object Similarity {
     require(cents.nonEmpty, "assignCell: empty centroid table")
     org.apache.spark.sql.SparkSession.getActiveSession match {
       case Some(s) =>
-        graft.functions.ArgMinCellExpr.register(s)
+        graft.functions.GraftFunctions.ensureRegistered(s)
         val sorted = cents.sortBy(_._1)
         val pos = graft.functions.ArgMinCellExpr.argMinCol(vec, sorted.map(_._2))
         // the native kernel returns the POSITION in the sorted centroid

@@ -269,12 +269,10 @@ object IndexPipeline {
       sdrf: Option[DataFrame],
       cfg: IndexConfig,
   ): IndexOutputs = {
-    graft.functions.EncodePeptidoformExpr.register(psms.sparkSession)
-    graft.functions.ModsToStructsExpr.register(psms.sparkSession)
-    // deltaMz/theoreticalMz below route residue summing through the native
-    // kernel — register it on the frame's OWNING session (call_function
-    // analyzes there; the active thread-local session may differ).
-    graft.functions.ResidueMassExpr.register(psms.sparkSession)
+    // the peptidoform, modification and residue-mass kernels below resolve
+    // on the frame's OWNING session (call_function analyzes there; the
+    // active thread-local session may differ)
+    graft.functions.GraftFunctions.ensureRegistered(psms.sparkSession)
 
     // ---- one row per PSM (mzTab repeats rows per protein accession).
     // A PSM is decoy only when ALL of its accessions are decoy (PIA

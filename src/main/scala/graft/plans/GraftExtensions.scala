@@ -1,76 +1,30 @@
 package graft.plans
 
-import graft.functions.{ArgMinCellExpr, DotProductExpr, EncodePeptidoformExpr, ModsToStructsExpr, ResidueMassExpr, SqDistExpr, VectorExprs, WordShinglesExpr}
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension registration for the engine's native Catalyst
-  * expressions — the deployment route for a shared cluster, where the
-  * functions must exist in every session without code calling a
-  * `register(spark)` helper first:
+/** Session extension carrying the engine's native Catalyst expressions
+  * and [[NativeVectorRule]]. [[graft.GraftSession]] loads it into every
+  * session it builds; on a shared cluster the same classes load through
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
   * }}}
   *
-  * The injected names are identical to the per-session registrations the
-  * library helpers perform lazily (`VectorExprs.register`,
-  * `EncodePeptidoformExpr.register`, `ModsToStructsExpr.register`), so
-  * code works the same with or without the extension — the extension just
-  * makes them first-class, including from pure SQL
-  * (`SELECT graft_vec_dot(a, b)`).
+  * The functions are the rows of [[GraftFunctions.Kernels]], the same
+  * table `GraftFunctions.ensureRegistered` reads, so a session behaves the
+  * same with or without the extension; the extension makes every kernel
+  * first-class from pure SQL (`SELECT graft_vec_dot(a, b)`), including in
+  * `newSession()` children.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  private def arity(name: String, n: Int)(
-      build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    VectorExprs.arity(name, n)(build)
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // optimizer rule: interpreted HOF dot/sqdist folds -> native kernels
     // (strict bit-identical match only; see NativeVectorRule)
     ext.injectOptimizerRule(_ => NativeVectorRule)
-    ext.injectFunction((
-      FunctionIdentifier(VectorExprs.DotName),
-      info(VectorExprs.DotName,
-        "_FUNC_(a, b) - sequential-fold dot product of two float/double arrays"),
-      arity(VectorExprs.DotName, 2)(exprs => DotProductExpr(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorExprs.SqDistName),
-      info(VectorExprs.SqDistName,
-        "_FUNC_(a, b) - sequential-fold squared euclidean distance"),
-      arity(VectorExprs.SqDistName, 2)(exprs => SqDistExpr(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(EncodePeptidoformExpr.FunctionName),
-      info(EncodePeptidoformExpr.FunctionName,
-        "_FUNC_(sequence, mods, charge) - peptidoform string with positioned mods"),
-      arity(EncodePeptidoformExpr.FunctionName, 3)(exprs =>
-        EncodePeptidoformExpr(exprs(0), exprs(1), exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier(ModsToStructsExpr.FunctionName),
-      info(ModsToStructsExpr.FunctionName,
-        "_FUNC_(mods) - positioned modification map to IdentifiedModification structs"),
-      arity(ModsToStructsExpr.FunctionName, 1)(exprs => ModsToStructsExpr(exprs(0)))))
-    ext.injectFunction((
-      FunctionIdentifier(WordShinglesExpr.FunctionName),
-      info(WordShinglesExpr.FunctionName,
-        "_FUNC_(text, n) - distinct word n-gram shingles, first-occurrence order"),
-      arity(WordShinglesExpr.FunctionName, 2)(exprs =>
-        WordShinglesExpr(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(ArgMinCellExpr.FunctionName),
-      info(ArgMinCellExpr.FunctionName,
-        "_FUNC_(vec, centroids) - nearest-centroid cell id (squared euclidean)"),
-      arity(ArgMinCellExpr.FunctionName, 2)(exprs =>
-        ArgMinCellExpr(exprs(0), exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier(ResidueMassExpr.FunctionName),
-      info(ResidueMassExpr.FunctionName,
-        "_FUNC_(sequence) - summed monoisotopic residue mass of a peptide"),
-      arity(ResidueMassExpr.FunctionName, 1)(exprs => ResidueMassExpr(exprs(0)))))
+    GraftFunctions.Kernels.foreach(k =>
+      ext.injectFunction((FunctionIdentifier(k.name), k.info, k.build)))
   }
 }

@@ -156,7 +156,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("ResidueMassExpr == HOF fold, bit-exact (property, incl. junk chars)") {
-    graft.functions.ResidueMassExpr.register(spark)
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     // residue alphabet + characters OUTSIDE the mass table (digits, *, unicode)
     val chars = Gen.oneOf(("ACDEFGHIKLMNPQRSTVWYUO" + "BXZ*17é").toSeq)
     val seqs = Gen.listOf(chars).map(_.mkString)
@@ -180,7 +180,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("EncodePeptidoformExpr equals the Scala codec (property, incl. codegen path)") {
     import graft.functions.EncodePeptidoformExpr
-    EncodePeptidoformExpr.register(spark)
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val rnd = new scala.util.Random(3)
     val aas = "ACDEFGHIKLMNPQRSTVWY"
     val rows = (1 to 300).map { i =>
@@ -204,7 +204,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("ModsToStructsExpr merges positions per accession (native vs schema)") {
     import graft.functions.ModsToStructsExpr
-    ModsToStructsExpr.register(spark)
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val df = Seq(
       Map(3 -> "UNIMOD:35", 7 -> "UNIMOD:35", 0 -> "UNIMOD:1"),
       Map.empty[Int, String],

@@ -160,8 +160,9 @@ class Round7Spec extends AnyFunSuite {
     }
   }
 
-  // Round-12 ChainBench discovery: sourceQuota admits in md5(id) priority
-  // order and the seedless hashSplit draw is a PREFIX of the same md5 —
+  // Round-12 composed-chain finding (PLANS.md "ChainBench discovery"):
+  // sourceQuota admits in md5(id) priority order and the seedless
+  // hashSplit draw is a PREFIX of the same md5 —
   // splitting a hash-order-subsampled set is catastrophically biased
   // (every admitted row lands in the head split). The seed decorrelates.
   test("hash split after hash-ordered subsampling: seedless is biased, seed fixes it") {

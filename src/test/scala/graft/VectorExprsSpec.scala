@@ -1,8 +1,11 @@
 package graft
 
-import graft.functions.VectorExprs
-import org.apache.spark.sql.Column
+import graft.functions.{DotProductExpr, SqDistExpr, VectorExprs}
+import graft.plans.NativeVectorRule
+import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native dot/sqdist kernels must be bit-identical to the
@@ -21,6 +24,38 @@ class VectorExprsSpec extends AnyFunSuite {
       (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
       lit(0.0), (acc, v) => acc + v)
 
+  /** A child session without [[NativeVectorRule]]: on double arrays the
+    * reference folds above match the rule's pattern once SimplifyCasts
+    * drops the no-op casts, and would otherwise be rewritten into the very
+    * kernels they check. */
+  private lazy val refSpark = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules", NativeVectorRule.ruleName)
+    s
+  }
+
+  /** Evaluates the kernel columns and the reference columns as two queries
+    * over the same rows (one RDD partition, so no local-relation folding
+    * and a stable row order) and pairs their results. The reference plan
+    * must still hold the interpreted fold and no kernel, so the comparison
+    * can never degenerate into the kernel against itself. */
+  private def kernelVsRef(rows: Seq[Row], elem: DataType, native: Seq[Column],
+      hof: Seq[Column]): Seq[(Row, Row)] = {
+    val schema = StructType(Seq("a", "b").map(StructField(_, ArrayType(elem))))
+    val df = refSpark.createDataFrame(refSpark.sparkContext.parallelize(rows, 1), schema)
+    val ref = df.select(hof: _*)
+    val exprs = ref.queryExecution.optimizedPlan.flatMap(_.expressions)
+    assert(exprs.exists(_.find(_.isInstanceOf[ArrayAggregate]).isDefined), ref.queryExecution)
+    assert(!exprs.exists(_.find {
+      case _: DotProductExpr | _: SqDistExpr => true
+      case _ => false
+    }.isDefined), ref.queryExecution)
+    df.select(native: _*).collect().toSeq.zip(ref.collect().toSeq)
+  }
+
+  private def sameBits(x: Double, y: Double): Boolean =
+    java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+
   private val floatRows = Seq(
     (Seq(1.0f, 2.5f, -3.25f, 0.1f), Seq(4.0f, -1.5f, 2.0f, 7.7f)),
     (Seq(0.0f, 0.0f, 0.0f, 0.0f), Seq(1.0f, 2.0f, 3.0f, 4.0f)),
@@ -28,47 +63,41 @@ class VectorExprsSpec extends AnyFunSuite {
   )
 
   test("native dot == HOF fold, bit-exact, float arrays") {
-    val df = floatRows.toDF("a", "b")
-    val r = df.select(
-      VectorExprs.dotNative(col("a"), col("b")).as("n"),
-      hofDot(col("a"), col("b")).as("h")).collect()
-    r.foreach(row => assert(
-      java.lang.Double.doubleToRawLongBits(row.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(row.getDouble(1))))
+    val r = kernelVsRef(floatRows.map { case (a, b) => Row(a, b) }, FloatType,
+      Seq(VectorExprs.dotNative(col("a"), col("b"))), Seq(hofDot(col("a"), col("b"))))
+    assert(r.length == floatRows.length)
+    r.foreach { case (n, h) => assert(sameBits(n.getDouble(0), h.getDouble(0)), (n, h)) }
   }
 
   test("native sqdist == HOF fold, bit-exact, double arrays") {
-    val df = floatRows.map { case (a, b) => (a.map(_.toDouble), b.map(_.toDouble)) }
-      .toDF("a", "b")
-    val r = df.select(
-      VectorExprs.sqDistNative(col("a"), col("b")).as("n"),
-      hofSqDist(col("a"), col("b")).as("h")).collect()
-    r.foreach(row => assert(
-      java.lang.Double.doubleToRawLongBits(row.getDouble(0)) ==
-        java.lang.Double.doubleToRawLongBits(row.getDouble(1))))
+    val rows = floatRows.map { case (a, b) => Row(a.map(_.toDouble), b.map(_.toDouble)) }
+    val r = kernelVsRef(rows, DoubleType,
+      Seq(VectorExprs.sqDistNative(col("a"), col("b"))), Seq(hofSqDist(col("a"), col("b"))))
+    assert(r.length == rows.length)
+    r.foreach { case (n, h) => assert(sameBits(n.getDouble(0), h.getDouble(0)), (n, h)) }
   }
 
   test("mixed float x double literal matches HOF") {
     val planes = Seq(0.5, -0.25, 0.125, -1.0)
-    val df = floatRows.toDF("a", "b")
-    val r = df.select(
-      VectorExprs.dotNative(col("a"), typedLit(planes)).as("n"),
-      hofDot(col("a"), typedLit(planes)).as("h")).collect()
-    r.foreach(row => assert(row.getDouble(0) == row.getDouble(1)))
+    val r = kernelVsRef(floatRows.map { case (a, b) => Row(a, b) }, FloatType,
+      Seq(VectorExprs.dotNative(col("a"), typedLit(planes))),
+      Seq(hofDot(col("a"), typedLit(planes))))
+    assert(r.length == floatRows.length)
+    r.foreach { case (n, h) => assert(n.getDouble(0) == h.getDouble(0), (n, h)) }
   }
 
   test("length mismatch and null element yield NULL (zip_with padding semantics)") {
-    val df = Seq(
-      (Seq[Option[Double]](Some(1.0), Some(2.0)), Seq[Option[Double]](Some(1.0))),
-      (Seq[Option[Double]](Some(1.0), None), Seq[Option[Double]](Some(1.0), Some(2.0))),
-    ).toDF("a", "b")
-    val r = df.select(
-      VectorExprs.dotNative(col("a"), col("b")).as("n"),
-      hofDot(col("a"), col("b")).as("h"),
-      VectorExprs.sqDistNative(col("a"), col("b")).as("ns"),
-      hofSqDist(col("a"), col("b")).as("hs")).collect()
-    r.foreach { row =>
-      assert(row.isNullAt(0) && row.isNullAt(1) && row.isNullAt(2) && row.isNullAt(3))
+    val rows = Seq(
+      Row(Seq(1.0, 2.0), Seq(1.0)),
+      Row(Seq(1.0, null), Seq(1.0, 2.0)),
+    )
+    val r = kernelVsRef(rows, DoubleType,
+      Seq(VectorExprs.dotNative(col("a"), col("b")),
+        VectorExprs.sqDistNative(col("a"), col("b"))),
+      Seq(hofDot(col("a"), col("b")), hofSqDist(col("a"), col("b"))))
+    assert(r.length == rows.length)
+    r.foreach { case (n, h) =>
+      assert(n.isNullAt(0) && n.isNullAt(1) && h.isNullAt(0) && h.isNullAt(1), (n, h))
     }
   }
 
@@ -112,7 +141,7 @@ class VectorExprsSpec extends AnyFunSuite {
   test("argmin-cell: NaN and overflow-to-Inf vectors yield NULL on BOTH eval paths") {
     import graft.functions.ArgMinCellExpr
     import graft.operators.Similarity
-    ArgMinCellExpr.register(spark)
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val cents = Seq((0, Seq(0.0, 0.0)), (1, Seq(1.0, 1.0)))
     val df = Seq(
       Seq(Double.NaN, 0.0), // NaN distance: no strict improvement ever fires
