@@ -44,41 +44,24 @@ object Bench {
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt
     val maxRepeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_REPEAT", "4").toInt.max(repeat)
     val noiseSpread = 1.3
-    // Process-CPU time next to wall time (r6 lesson: a co-tenant on the
-    // box inflated driver-run wall numbers 4.5-10x; cpu_sec barely moves
-    // under contention, so wall>>previous-round-wall with flat cpu reads
-    // as a noisy box, not a regression). local[*] keeps all executor
-    // work in-process, so this captures the whole query's CPU.
-    val osBean = java.lang.management.ManagementFactory
-      .getPlatformMXBean(classOf[com.sun.management.OperatingSystemMXBean])
-    // Per-query GC wall time (sum over all collectors) rides along in
-    // bench_full.json — the round-13/14 in-suite-vs-isolated spreads
-    // (txt_distinct_ngrams 5.6 s in-suite vs 1.3 s isolated) need the
-    // GC share of each number to be attributable, not guessed.
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime.max(0L)).sum
-    val loadStart = osBean.getSystemLoadAverage
+    // Wall, process CPU and GC per repeat (Stage.measure): the CPU and GC
+    // shares let a noisy-box figure be told from a regression.
+    val loadStart = Stage.loadAverage
     val ran = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       var attempts = 0
       var broke = false
-      val times = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
+      val times = scala.collection.mutable.ArrayBuffer.empty[Stage.Sample]
       // two runs "agree" when the faster is within noiseSpread of the
       // slower — then the min is a believable steady state, not a race
       // the co-tenant happened to lose twice
       def settled: Boolean = times.size >= 2 && {
-        val ws = times.map(_._1).sorted
+        val ws = times.map(_.wallSec).sorted
         ws(1) <= ws(0) * noiseSpread
       }
       while (!broke && attempts < maxRepeat && (attempts < repeat || !settled)) {
         attempts += 1
-        val t0 = System.nanoTime()
-        val c0 = osBean.getProcessCpuTime
-        val g0 = gcMillis()
         try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          times += (((System.nanoTime() - t0) / 1e9, (osBean.getProcessCpuTime - c0) / 1e9,
-            (gcMillis() - g0) / 1e3))
+          times += Stage.measure(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           broke = true
@@ -94,11 +77,11 @@ object Bench {
       System.gc()
       name -> (if (broke) None else Some(times.toSeq))
     }
-    val loadEnd = osBean.getSystemLoadAverage
-    val rawByName = ran.collect { case (n, Some(ts)) => n -> ts.map(_._1) }.toMap
-    val results = ran.collect { case (n, Some(ts)) => n -> ts.map(_._1).min }
-    val cpuByName = ran.collect { case (n, Some(ts)) => n -> ts.minBy(_._1)._2 }.toMap
-    val gcByName = ran.collect { case (n, Some(ts)) => n -> ts.minBy(_._1)._3 }.toMap
+    val loadEnd = Stage.loadAverage
+    val rawByName = ran.collect { case (n, Some(ts)) => n -> ts.map(_.wallSec) }.toMap
+    val results = ran.collect { case (n, Some(ts)) => n -> ts.map(_.wallSec).min }
+    val cpuByName = ran.collect { case (n, Some(ts)) => n -> ts.minBy(_.wallSec).cpuSec }.toMap
+    val gcByName = ran.collect { case (n, Some(ts)) => n -> ts.minBy(_.wallSec).gcSec }.toMap
     val failed = ran.collect { case (n, None) => n }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // The driver keeps only the LAST ~2000 chars of stdout and json-parses
@@ -111,9 +94,7 @@ object Bench {
     // is also written to bench_full.json for offline reading.
     val total = results.map(_._2).sum
     val totalCpu = cpuByName.values.sum
-    // Locale.ROOT: the f interpolator uses the JVM default locale, and a
-    // comma-decimal locale would emit unparseable "JSON"
-    def d3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import Stage.d3
     def fmtQs(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + d3(v) }.mkString("{", ",", "}")
     // "raw" = every repeat's wall time per query (first entry = cold).

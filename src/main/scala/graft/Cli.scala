@@ -15,8 +15,27 @@ object Cli {
     * fail loudly, not write the index to a directory literally named
     * `true`. An explicit `--flag false` stays supported. */
   private[graft] val BooleanFlags: Set[String] = Set(
-    "score-lower-is-better", "distributed-fdr", "picked-protein-fdr",
+    "score-lower-is-better", "picked-protein-fdr",
     "protein-score-from-fdrscore", "exact-mgf", "native-cluster")
+
+  /** The options each command takes. Any other option is an ERROR: `run`
+    * reads only the keys it knows, so a misspelled option (say
+    * `--qvalue-treshold 0.05`) would otherwise be dropped silently and the
+    * index written at the default. */
+  private val Options: Map[String, Set[String]] = Map(
+    "generate-index-files" -> Set("mztab", "mzid", "pridexml", "spectra",
+      "project-accession", "assay-accession", "reanalysis-accession",
+      "qvalue-threshold", "protein-qvalue-threshold", "peptide-length", "min-psms",
+      "unique-peptides", "score-lower-is-better", "picked-protein-fdr",
+      "protein-score-from-fdrscore", "exact-mgf", "sdrf", "decoy-prefix", "out",
+      "global-sample-props"),
+    "perform-inference" -> Set("spectra-json", "out", "clusters", "native-cluster",
+      "precursor-tol", "min-cosine", "index"),
+    "generate-mgf-files" -> Set("spectra-json", "out"),
+    "spectra-json-check" -> Set("spectra-json", "out"),
+    "get-result-files" -> Set("project-accession", "out"),
+    "get-related-files" -> Set("project-accession", "mzid", "out"),
+  )
 
   /** Strict `--key value` / bare `--flag` parser: a stray non-option token
     * or a mis-paired window is an ERROR, not a silent drop — the old
@@ -53,7 +72,11 @@ object Cli {
 
   def run(spark: SparkSession, args: Array[String]): Unit = {
     val cmd = args.head
+    val known = Options.getOrElse(cmd,
+      throw new IllegalArgumentException(s"unknown command: $cmd\n$usage"))
     val o = parseArgs(args)
+    val unknown = o.keys.filterNot(known).map("--" + _)
+    require(unknown.isEmpty, s"$cmd does not take ${unknown.mkString(", ")}\n$usage")
     def req(k: String): String =
       o.getOrElse(k, throw new IllegalArgumentException(s"missing --$k\n$usage"))
 
@@ -69,7 +92,6 @@ object Cli {
           minPsms = o.get("min-psms").map(_.toLong).getOrElse(1000L),
           uniquePeptides = o.get("unique-peptides").map(_.toInt).getOrElse(0),
           scoreLowerIsBetter = o.get("score-lower-is-better").exists(_.toBoolean),
-          distributedFdr = o.get("distributed-fdr").exists(_.toBoolean),
           pickedProteinFdr = o.get("picked-protein-fdr").exists(_.toBoolean),
           proteinScoreFromPsmFdrScore =
             o.get("protein-score-from-fdrscore").exists(_.toBoolean),
@@ -102,13 +124,17 @@ object Cli {
             throw new IllegalArgumentException(
               s"${many.map("--" + _._1).mkString(" and ")} are mutually exclusive\n$usage")
         }
-        val v = out.validity.head()
-        println(s"[graft] nr_psms=${v.getAs[Long]("nr_psms")} nr_decoys=${v.getAs[Long]("nr_decoys")}")
-        // F9 assay gate (PrideAnalysisAssayService.java:477-480)
-        if (v.getAs[Long]("nr_decoys") == 0)
-          System.err.println("[graft] WARNING: no decoys found — assay invalid under F9")
-        if (v.getAs[Long]("nr_psms") <= cfg.minPsms)
-          System.err.println(s"[graft] WARNING: psms <= ${cfg.minPsms} — assay below minPSMs gate")
+        // the outputs are written: release the index caches so later
+        // commands in the same session do not run beside them
+        try {
+          val v = out.validity.head()
+          println(s"[graft] nr_psms=${v.getAs[Long]("nr_psms")} nr_decoys=${v.getAs[Long]("nr_decoys")}")
+          // F9 assay gate (PrideAnalysisAssayService.java:477-480)
+          if (v.getAs[Long]("nr_decoys") == 0)
+            System.err.println("[graft] WARNING: no decoys found — assay invalid under F9")
+          if (v.getAs[Long]("nr_psms") <= cfg.minPsms)
+            System.err.println(s"[graft] WARNING: psms <= ${cfg.minPsms} — assay below minPSMs gate")
+        } finally out.unpersist()
 
       case "perform-inference" =>
         if (o.contains("native-cluster")) {
@@ -137,9 +163,6 @@ object Cli {
         val rest = new PrideRest()
         val files = rest.files(spark, req("project-accession"))
         Commands.getRelatedFiles(spark, req("mzid").split(",").toSeq, files, req("out"))
-
-      case other =>
-        throw new IllegalArgumentException(s"unknown command: $other\n$usage")
     }
   }
 
@@ -155,8 +178,7 @@ object Cli {
       |                       [--qvalue-threshold 0.01] [--peptide-length 7]
       |                       [--protein-qvalue-threshold 0.01]
       |                       [--min-psms 1000] [--score-lower-is-better]
-      |                       [--unique-peptides 0] [--distributed-fdr]
-      |                       [--picked-protein-fdr]
+      |                       [--unique-peptides 0] [--picked-protein-fdr]
       |                       [--protein-score-from-fdrscore]
       |                       [--exact-mgf] [--sdrf F] [--decoy-prefix DECOY_]
       |                       --out DIR

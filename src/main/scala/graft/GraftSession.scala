@@ -5,8 +5,8 @@ import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** The engine's one session factory. The CLI, Bench, Verify,
-  * InvarianceCheck, the scale benches and the tests all build their
-  * session here, under one rule ([[settings]]):
+  * InvarianceCheck, [[Harness]] (the scale benches) and the tests all
+  * build their session here, under one rule ([[settings]]):
   *  - `cpus` is `$SPARK_GRAFT_CPUS`, else the JVM's available processors;
   *  - the master is `$SPARK_MASTER`, else spark-submit's, else `local[cpus]`;
   *  - shuffle partitions are `$SPARK_GRAFT_CPUS`, else spark-submit's, else

@@ -222,7 +222,7 @@ private[graft] object QueryShared {
     // gen*1000) collision-free at EVERY SF — at sf0.1 the raw table has
     // 2000 vectors and base ids 1000+ would collide with the gen-1
     // copies (the one way an SF regeneration could redden this oracle;
-    // scale evidence for the clusterer itself is ClusterBench at 500k)
+    // scale evidence for the clusterer itself is `Harness cluster` at 500k)
     val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") < 1000)
     val tagged = emb.withColumn("gen", explode(

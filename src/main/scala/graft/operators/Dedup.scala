@@ -1130,7 +1130,7 @@ object Dedup {
     tfidfNearDupFromStats(tfidfStats(docs, id, text, shingleN), threshold, maxDf)
 
   /** The persistable stats half of [[tfidfNearDupPairs]] (round-13, the
-    * r12 CorpusBench note): one corpus pass builds the df/idf-weighted
+    * r12 corpus-bench note): one corpus pass builds the df/idf-weighted
     * posting table and the per-doc norms — the two heavy corpus-wide
     * folds — as plain DataFrames a production pipeline writes ONCE
     * beside the corpus ([[TfidfModel.save]]) and every subsequent

@@ -36,7 +36,7 @@ import scala.collection.mutable
   * cutoff, drains the candidate queue, and visits the entire shard: with
   * `nProbe = nCells` the result is the exact global top-k, and the DuckDB
   * oracle is the plain brute-force ranking. Smaller `efSearch`/`nProbe`
-  * give the genuinely approximate index the AnnBench recall/latency
+  * give the genuinely approximate index the `Harness ann` recall/latency
   * frontier is measured on.
   */
 object Hnsw {

@@ -323,12 +323,12 @@ object TimeSeries {
     // be a window aggregate, and the previous array-fold
     // (aggregate + concat) copied the accumulator per step — quadratic
     // in buckets-per-key: 53.3 s -> 24.3 s at 20M events/100k keys in
-    // EventBench. The (key, bucket) aggregation is FUSED into the same
+    // `Harness event`. The (key, bucket) aggregation is FUSED into the same
     // scan (round-11): with ~1 event per (key, bucket) cell, a groupBy
     // gains nothing map-side but pays its own full exchange plus a
     // second repartition(key) — shuffling the RAW rows once by key and
     // finishing the bucket aggregation on the sorted run halves the
-    // shuffle count (EventBench A/B: 14.8 -> 3.3 s at 20M events, same
+    // shuffle count (`Harness event` A/B: 14.8 -> 3.3 s at 20M events, same
     // box, PLANS.md). Cent sums are exact longs (order-free), and the
     // mean/EWMA float ops replay the previous plan's exact IEEE
     // sequence, so results are bit-identical (gate + invariance prove

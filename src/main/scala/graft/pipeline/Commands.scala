@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.io._
 import graft.functions.UsiFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's six CLI commands (ArchiveMoleculesIndexer.java:28-30) as
@@ -15,18 +15,20 @@ object Commands {
     * SubmissionPipelineUtils.java:106-128; id-format per type per the
     * SpectraData conventions — MGF is index-addressed, mzML scan-addressed). */
   def msRunFileInfo(msRuns: DataFrame): DataFrame = {
-    // fileName must match the DECOMPRESSED spectra file the scan read (the
-    // reference normalizes with returnUnCompressPath before matching,
-    // SubmissionPipelineUtils.java:174-179) — keep the .gz/.zip suffix and
-    // the J1 join silently matches nothing.
-    val base = regexp_replace(element_at(split(col("location"), "/"), -1), "\\.(gz|zip)$", "")
+    val (fileName, fileType, idFormat) = spectraFile(col("location"))
+    msRuns.select(col("msRun"), fileName, fileType, idFormat.as("idFormat"))
+  }
+
+  /** The `fileName` and `fileType` columns of the spectra file a result
+    * file's `location` names, plus the id format its extension implies.
+    * fileName must match the DECOMPRESSED spectra file the scan read (the
+    * reference normalizes with returnUnCompressPath before matching,
+    * SubmissionPipelineUtils.java:174-179) — keep the .gz/.zip suffix and
+    * the J1 join silently matches nothing. */
+  private def spectraFile(location: Column): (Column, Column, Column) = {
+    val base = regexp_replace(element_at(split(location, "/"), -1), "\\.(gz|zip)$", "")
     val lowerBase = lower(base)
-    msRuns.select(
-      col("msRun"),
-      base.as("fileName"),
-      fileTypeFromName(lowerBase).as("fileType"),
-      idFormatFromName(lowerBase).as("idFormat"),
-    )
+    (base.as("fileName"), fileTypeFromName(lowerBase).as("fileType"), idFormatFromName(lowerBase))
   }
 
   /** Every format `readSpectraDir` can load must be reachable from the
@@ -58,10 +60,6 @@ object Commands {
         UsiFunctions.IdFormat.MultiPeakListNativeId)
       .otherwise(UsiFunctions.IdFormat.None)
 
-  /** generate-index-files (mzTab + MGF slice): parse, join run metadata,
-    * run the index DAG, write the three JSON-lines tables (K1) plus the
-    * per-source-file partitioned spectra (K2).
-    * Reference: PrideAnalysisAssayService.writeAnalysisOutputFromResultFiles:242-304. */
   /** Union all spectra files under a directory: MGF and PKL via splittable
     * text block scans, mzML via the StAX task-per-file parser. Each source
     * carries its `fileType` for J1 key derivation. */
@@ -99,6 +97,9 @@ object Commands {
     parts.reduce(_ unionByName _)
   }
 
+  /** generate-index-files (mzTab + MGF slice): parse, join run metadata,
+    * run the index DAG and write its tables ([[writeIndex]]).
+    * Reference: PrideAnalysisAssayService.writeAnalysisOutputFromResultFiles:242-304. */
   def generateIndexFiles(
       spark: SparkSession,
       mzTabPath: String,
@@ -112,10 +113,20 @@ object Commands {
       MzTabIO.readPsmSection(spark, mzTabPath), cfg.decoyPrefix)
     val runInfo = broadcast(msRunFileInfo(MzTabIO.readMsRuns(spark, mzTabPath)))
     val psms = psmsRaw.join(runInfo, Seq("msRun"), "left")
-    val spectra = readSpectraDir(spark, mgfDir, exactMgf)
-    val sdrf = sdrfPath.map(SideInputs.readSdrf(spark, _))
+    writeIndex(psms, readSpectraDir(spark, mgfDir, exactMgf), sdrfPath, cfg, outDir)
+  }
 
-    val out = IndexPipeline.run(psms, spectra, sdrf, cfg)
+  /** Runs the index DAG and writes the three JSON-lines tables (K1), the
+    * archive spectra partitioned per source file (K2). */
+  private def writeIndex(
+      psms: DataFrame,
+      spectra: DataFrame,
+      sdrfPath: Option[String],
+      cfg: IndexPipeline.IndexConfig,
+      outDir: String,
+  ): IndexPipeline.IndexOutputs = {
+    val out = IndexPipeline.run(psms, spectra,
+      sdrfPath.map(SideInputs.readSdrf(psms.sparkSession, _)), cfg)
     ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
     ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
     ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
@@ -138,19 +149,14 @@ object Commands {
     // one StAX pass per file serves both frames (psms + SpectraData)
     val (psmsRaw, sdRaw, releaseParsed) = MzIdentMlIO.readParsed(spark, mzidPaths)
     val sd = sdRaw.withColumnRenamed("file", "mzidFile")
-    val base = regexp_replace(element_at(split(col("location"), "/"), -1), "\\.(gz|zip)$", "")
-    val lowerBase = lower(base)
+    val (fileName, fileType, idFormatByName) = spectraFile(col("location"))
+    val declared = UsiFunctions.IdFormat.fromAccession(col("idFormatAccession"))
     val sdInfo = sd.select(
-      col("mzidFile"), col("spectraDataId"),
-      base.as("fileName"),
-      fileTypeFromName(lowerBase).as("fileType"),
+      col("mzidFile"), col("spectraDataId"), fileName, fileType,
       // The declared SpectrumIDFormat wins; fall back to the extension
       // mapping when the cvParam is absent/unknown.
-      when(graft.functions.UsiFunctions.IdFormat.fromAccession(col("idFormatAccession"))
-          =!= graft.functions.UsiFunctions.IdFormat.None,
-        graft.functions.UsiFunctions.IdFormat.fromAccession(col("idFormatAccession")))
-        .otherwise(idFormatFromName(lowerBase))
-        .as("idFormat"))
+      when(declared =!= UsiFunctions.IdFormat.None, declared)
+        .otherwise(idFormatByName).as("idFormat"))
 
     val joined = psmsRaw
       .join(broadcast(sdInfo),
@@ -237,14 +243,8 @@ object Commands {
     // and pin the full parsed-XML RDD in MEMORY_AND_DISK until session
     // end. On success the outputs above have materialized the pipeline
     // caches, so the raw parse RDD has no remaining readers either way.
-    try {
-      val out = IndexPipeline.run(psms, readSpectraDir(spark, spectraDir, exactMgf),
-        sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg)
-      ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
-      ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
-      ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
-      out
-    } finally releaseParsed()
+    try writeIndex(psms, readSpectraDir(spark, spectraDir, exactMgf), sdrfPath, cfg, outDir)
+    finally releaseParsed()
   }
 
   /** generate-index-files from legacy PRIDE XML result files — the last
@@ -286,13 +286,7 @@ object Commands {
       .select("psmId", "peptideSequence", "proteinAccession", "isDecoy", "score",
         "charge", "expMassToCharge", "calcMassToCharge", "modifications",
         "sourceId", "fileName", "idFormat", "fileType", "retentionTime")
-
-    val out = IndexPipeline.run(psms, spectra,
-      sdrfPath.map(SideInputs.readSdrf(spark, _)), cfg)
-    ArchiveJson.writePartitioned(out.archiveSpectra, s"$outDir/archive_spectra")
-    ArchiveJson.write(out.psmSummaries, s"$outDir/psm_summaries")
-    ArchiveJson.write(out.proteinEvidence, s"$outDir/protein_evidence")
-    out
+    writeIndex(psms, spectra, sdrfPath, cfg, outDir)
   }
 
   /** Index sidecar location for an MGF output dir: the (usi, index)

@@ -34,19 +34,13 @@ object IndexPipeline {
       uniquePeptides: Int = 0,
       /** true when smaller PSM scores are better (e-values / PEP). */
       scoreLowerIsBetter: Boolean = false,
-      /** Force the range-partitioned distributed FDR
-        * (TargetDecoy.withQValuesGlobal) instead of the single-partition
-        * window. The window is faster up to several million PSMs (the FDR
-        * runs pre-join on narrow rows and the rest of the DAG dominates);
-        * normally leave this false — the pipeline auto-switches to the
-        * distributed path when the deduped PSM count exceeds
-        * [[fdrWindowMaxRows]]. */
-      distributedFdr: Boolean = false,
       /** Auto-switch threshold: above this many deduped PSMs the FDR takes
-        * the distributed range-sort path rather than one window task.
-        * 4M narrow rows sort comfortably in one task (reference assays cap
-        * at ~800k, conf/base.config:53-57); beyond that the single sorted
-        * partition becomes the straggler. */
+        * the distributed range-sort path (TargetDecoy.withQValuesGlobal)
+        * rather than one window task. The window is faster up to several
+        * million PSMs (the FDR runs pre-join on narrow rows and the rest of
+        * the DAG dominates): 4M narrow rows sort comfortably in one task
+        * (reference assays cap at ~800k, conf/base.config:53-57); beyond
+        * that the single sorted partition becomes the straggler. */
       fdrWindowMaxRows: Long = 4000000,
       /** Picked protein FDR (published competition method): each
         * target/decoy protein pair (accession vs decoyPrefix+accession)
@@ -99,10 +93,10 @@ object IndexPipeline {
     def unpersist(): Unit = cached.foreach(_.unpersist())
   }
 
-  /** The A14 path decision, exposed for tests: distributed when forced or
-    * when the deduped PSM count exceeds the one-task window budget. */
+  /** The A14 path decision, exposed for tests: distributed when the
+    * deduped PSM count exceeds the one-task window budget. */
   def useDistributedFdr(cfg: IndexConfig, psmCount: Long): Boolean =
-    cfg.distributedFdr || psmCount > cfg.fdrWindowMaxRows
+    psmCount > cfg.fdrWindowMaxRows
 
   private def param(accession: String, name: String, value: Column): Column =
     struct(lit(accession).as("accession"), lit(name).as("name"),
@@ -125,6 +119,14 @@ object IndexPipeline {
           modification = CvParam("UNIMOD", acc, acc, null),
           properties = Seq.empty)
       })
+
+  /** Upper bound on the stage-2 rescue probe set (distinct missed ids
+    * collected to the driver). Rescue rows are malformed-id NOISE — a
+    * probe set anywhere near this size means the id format itself is
+    * wrong, and the join must fail with a diagnosis rather than broadcast
+    * the whole PSM id set. ~1M (fileName, id) strings ≈ low hundreds of
+    * MB on the driver, the same order as Spark's own broadcast ceiling. */
+  private[pipeline] val RescueLookupCap = 1000000
 
   /** J1 — PSM⋈spectrum resolution: the reference's staged id lookup
     * (JmzReaderSpectrumService.getSpectrumById:70-106) as joins.
@@ -155,14 +157,6 @@ object IndexPipeline {
     * @return exact + rescued rows; rescued rows keep the PSM's `scanKey`
     *         (USI identifiers derive from the PSM's own annotation)
     */
-  /** Upper bound on the stage-2 rescue probe set (distinct missed ids
-    * collected to the driver). Rescue rows are malformed-id NOISE — a
-    * probe set anywhere near this size means the id format itself is
-    * wrong, and the join must fail with a diagnosis rather than broadcast
-    * the whole PSM id set. ~1M (fileName, id) strings ≈ low hundreds of
-    * MB on the driver, the same order as Spark's own broadcast ceiling. */
-  private[pipeline] val RescueLookupCap = 1000000
-
   def scanKeyJoin(
       psmKeyed: DataFrame,
       spectraKeyed: DataFrame,

@@ -346,6 +346,32 @@ class CommandsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](graft.Cli.parseArgs(Array("cmd", "--out")))
     intercept[IllegalArgumentException](
       graft.Cli.parseArgs(Array("cmd", "--out", "--exact-mgf")))
+    // an option the command does not take is an ERROR, before any work: a
+    // misspelled threshold must not write the index at the default 0.01
+    val dir = Files.createTempDirectory("graft-cli-typo")
+    val e = intercept[IllegalArgumentException](graft.Cli.run(spark, Array(
+      "generate-index-files", "--mztab", "missing.mztab", "--spectra", "missing",
+      "--project-accession", "PXDCLI", "--qvalue-treshold", "0.05",
+      "--out", dir.resolve("out").toString)))
+    assert(e.getMessage.contains("does not take --qvalue-treshold"), e.getMessage)
+    assert(!Files.exists(dir.resolve("out")))
+    // an option of another command is unknown here too
+    intercept[IllegalArgumentException](graft.Cli.run(spark, Array(
+      "generate-mgf-files", "--spectra-json", "s", "--out", "o", "--native-cluster")))
+  }
+
+  test("generate-index-files releases the index caches it built") {
+    val dir = Files.createTempDirectory("graft-cli-cache")
+    val mgfDir = Files.createDirectory(dir.resolve("spectra"))
+    write(mgfDir, "run1.mgf", mgfBlocks(4))
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Cli.run(spark, Array("generate-index-files",
+      "--mztab", write(dir, "assay.mztab", mztab), "--spectra", mgfDir.toString,
+      "--project-accession", "PXDCLI", "--qvalue-threshold", "0.05", "--min-psms", "1",
+      "--out", dir.resolve("out").toString))
+    assert(ArchiveJson.readPartitioned(spark, s"$dir/out/archive_spectra").count() == 3)
+    assert(persisted == before)
   }
 
   test("perform-inference --native-cluster: standalone path, no MaraCluster TSV") {

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The one session rule, and the lint that keeps it the only one. */
+/** The one session rule, and the lints that keep one session builder and
+  * five entry points. */
 class GraftSessionSpec extends AnyFunSuite {
 
   private def conf(env: Map[String, String], submitted: Map[String, String] = Map.empty) =
@@ -33,19 +34,32 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(both("spark.sql.shuffle.partitions") == "5")
   }
 
-  test("lint: GraftSession holds the only session builder under src/") {
-    val needle = java.util.regex.Pattern.quote("SparkSession" + ".builder(")
+  /** `pattern`'s matches per `.scala` file under `dir` (relative to the
+    * repository root), for the files that have any. */
+  private def matches(dir: String, pattern: String): Seq[(java.io.File, Int)] = {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap { f =>
         if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
       }
-    val src = new java.io.File("src")
-    assert(src.isDirectory, s"run from the repository root (cwd ${new java.io.File(".").getAbsolutePath})")
-    val hits = scalaFiles(src).flatMap { f =>
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"run from the repository root (cwd ${new java.io.File(".").getAbsolutePath})")
+    scalaFiles(root).flatMap { f =>
       val s = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try needle.r.findAllMatchIn(s.mkString).size finally s.close()
-      if (n > 0) Some(f.getPath.replace('\\', '/') -> n) else None
+      val n = try pattern.r.findAllMatchIn(s.mkString).size finally s.close()
+      if (n > 0) Some(f -> n) else None
     }
+  }
+
+  test("lint: GraftSession holds the only session builder under src/") {
+    val hits = matches("src", java.util.regex.Pattern.quote("SparkSession" + ".builder("))
+      .map { case (f, n) => f.getPath.replace('\\', '/') -> n }
     assert(hits == Seq("src/main/scala/graft/GraftSession.scala" -> 1), hits.mkString(", "))
+  }
+
+  test("lint: the objects with a main under src/main are Cli, Bench, Verify, InvarianceCheck and Harness") {
+    val mains = matches("src/main", raw"def main\(")
+      .flatMap { case (f, n) => Seq.fill(n)(f.getName.stripSuffix(".scala")) }
+    assert(mains.sorted == Seq("Bench", "Cli", "Harness", "InvarianceCheck", "Verify"),
+      mains.mkString(", "))
   }
 }

@@ -56,11 +56,10 @@ class Round2Spec extends AnyFunSuite {
     joined.foreach(r => assert(r.getDouble(1) == r.getDouble(2)))
   }
 
-  test("FDR auto-switch: threshold decides the path, manual flag forces it") {
+  test("FDR auto-switch: threshold decides the path") {
     val cfg = IndexPipeline.IndexConfig("PX", "a1", fdrWindowMaxRows = 1000)
     assert(!IndexPipeline.useDistributedFdr(cfg, 1000))
     assert(IndexPipeline.useDistributedFdr(cfg, 1001))
-    assert(IndexPipeline.useDistributedFdr(cfg.copy(distributedFdr = true), 1))
   }
 
   test("index outputs identical when the auto-switch takes the distributed path") {
